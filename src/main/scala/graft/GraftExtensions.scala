@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{ArrayDotProduct, ArrayScale, BloomOps, CharDeletionHashes, CharDeletions, HeavyHitters, HtmlExtract, HyperplaneSigs, NearestCells, RollingHash, SimHash64, SimHashWide, TokenSetHits, TopKByScore, UrlCanon, WordShingles}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 
-/** Session extension registering graft's native expressions as SQL
-  * functions — the supported deployment path for custom Catalyst code:
+/** Session extension registering graft's native expressions (every row
+  * of [[GraftFunctions.all]]) as SQL functions — the supported
+  * deployment path for custom Catalyst code:
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
@@ -15,7 +16,12 @@ import graft.functions.{ArrayDotProduct, ArrayScale, BloomOps, CharDeletionHashe
   * }}}
   *
   * after which `SELECT graft_simhash64(text) FROM docs` parses and
-  * codegens like a builtin. (The same hook would register a custom
+  * codegens like a builtin. Operators build their columns with
+  * `call_function("graft_…")`, so an operator called directly needs a
+  * session with this extension (`SparkConfigs.local` and the test
+  * session set it) or one [[GraftFunctions.install]] call on it first.
+  * `SparkEntry`, `Pipeline.run` and `TrainingDataPipeline.run` make that
+  * call themselves. (The same hook would register a custom
   * `Rule[LogicalPlan]` via `injectOptimizerRule` or a `SparkStrategy`
   * via `injectPlannerStrategy` if an operator ever needs a bespoke
   * physical plan; graft's operators so far compose from existing plans,
@@ -23,79 +29,11 @@ import graft.functions.{ArrayDotProduct, ArrayScale, BloomOps, CharDeletionHashe
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def inject(name: String, usage: String,
-        builder: Seq[Expression] => Expression): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach { case (name, usage, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo("graft", null, name, usage, ""),
         builder))
-
-    inject("graft_rolling_hash",
-      "polynomial rolling-hash fingerprint of a string", RollingHash.builder)
-    inject("graft_simhash64",
-      "64-bit SimHash of space-tokenized text", SimHash64.builder)
-    inject("graft_simhash_wide",
-      "width-scaled SimHash of space-tokenized text as n 64-bit lanes",
-      SimHashWide.builder)
-    inject("graft_word_shingles",
-      "distinct k-word shingles of text", WordShingles.shinglesBuilder)
-    inject("graft_word_ngrams",
-      "all k-word grams of text in position order", WordShingles.ngramsBuilder)
-    inject("graft_dot",
-      "dot product of two array<double> columns", ArrayDotProduct.builder)
-    inject("graft_scale",
-      "element-wise division of an array<double> by a scalar", ArrayScale.builder)
-    inject("graft_top_k_by_score",
-      "top-k (score, id) pairs per group via a bounded heap",
-      TopKByScore.builder)
-    inject("graft_hyperplane_sigs",
-      "per-table hyperplane-LSH sign-bit signatures of an embedding",
-      HyperplaneSigs.builder)
-    inject("graft_token_set_hits",
-      "count of space-tokens present in a literal token set (duplicates counted)",
-      TokenSetHits.builder)
-    inject("graft_nearest_cells",
-      "indices of the n nearest centroids to a vector (IVF assign/probe)",
-      NearestCells.builder)
-    inject("graft_heavy_hitters",
-      "Misra-Gries frequent-items candidates (id, est) with k counters",
-      HeavyHitters.builder)
-    inject("graft_char_deletions",
-      "single-deletion neighborhood of a string (SymSpell blocking keys)",
-      CharDeletions.builder)
-    inject("graft_char_deletion_hashes",
-      "XXH64 hashes of the deletion neighborhood (allocation-free blocking keys)",
-      CharDeletionHashes.builder)
-    inject("graft_char_deletion_hashlens",
-      "deletion-neighborhood keys with code-point length packed into the top 16 bits",
-      CharDeletionHashes.packedBuilder)
-    inject("graft_bloom_agg",
-      "distributed bloom-filter build over long keys (merge-safe partials)",
-      BloomOps.aggBuilder)
-    inject("graft_bloom_contains",
-      "bloom-filter probe; false = proof of absence",
-      BloomOps.containsBuilder)
-    inject("graft_html_text",
-      "main text of an HTML page (boilerplate-dropped blocks joined by \\n)",
-      HtmlExtract.textBuilder)
-    inject("graft_html_block_stats",
-      "HTML block census [n_blocks, n_kept, n_dropped_link, n_dropped_short]",
-      HtmlExtract.statsBuilder)
-    inject("graft_html_parsed",
-      "full HTML parse as one struct (text + block census in a single page walk)",
-      HtmlExtract.parsedBuilder)
-    inject("graft_html_links",
-      "href values of anchor opening tags in document order",
-      HtmlExtract.linksBuilder)
-    inject("graft_url_canon",
-      "canonical form of a URL (case, default port, tracking params, fragment)",
-      UrlCanon.canonBuilder)
-    inject("graft_url_host",
-      "canonical host of a URL (lowercased, default port stripped)",
-      UrlCanon.hostBuilder)
-    inject("graft_chunk_hashes",
-      "sha2-256 hex keys of content-defined chunks (gear/CDC cut rule)",
-      graft.functions.ChunkHashes.builder)
-  }
+    }
 }

@@ -47,6 +47,7 @@ object Pipeline {
     * the four analytics results computed FROM the lake's gold layer. */
   def run(spark: SparkSession, srcDir: String, lakeBase: String,
       loadDate: String = "d20260101"): RunResult = {
+    graft.functions.GraftFunctions.install(spark)
 
     // 1. extract → bronze (reference extracts each source table to CSV)
     val sources = Map(

@@ -20,8 +20,7 @@ object SparkConfigs {
   def local(builder: SparkSession.Builder, cores: Int): SparkSession.Builder =
     builder
       .master(s"local[$cores]")
-      // register graft's native functions once at session build — the
-      // per-operator register() calls then no-op (see Registration)
+      // every row of GraftFunctions.all, injected once at session build
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")

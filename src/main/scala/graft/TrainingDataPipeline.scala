@@ -73,6 +73,7 @@ object TrainingDataPipeline {
   /** Full curation run over `<srcDir>/documents.parquet`; writes the
     * final training manifest under `<lakeBase>/curated/manifest`. */
   def run(spark: SparkSession, srcDir: String, lakeBase: String): RunResult = {
+    graft.functions.GraftFunctions.install(spark)
     val docs = graft.sources.Tables.table(spark, srcDir, "documents")
       .select("doc_id", "lang")
 
@@ -193,7 +194,7 @@ object TrainingDataPipeline {
     val curatedDocs = graft.sources.Tables.table(spark, srcDir, "documents")
       .select("doc_id", "text")
       .join(frontier, Seq("doc_id"), "left_semi")
-    Dedup.writeSignatureIndex(spark, curatedDocs, sigPath)
+    Dedup.writeSignatureIndex(curatedDocs, sigPath)
 
     RunResult(stageCounts, dqPassed, path, sigPath)
   }

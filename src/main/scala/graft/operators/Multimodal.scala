@@ -667,7 +667,6 @@ object Multimodal {
     * determinism rules) so the oracle stays SQL. */
   def frameSamples(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.ArrayDotProduct.register(spark)
     val recs = Tables.table(spark, dir, "documents")
       .select(
         col("doc_id"),
@@ -876,7 +875,7 @@ object Multimodal {
     val tables = frameLshTablesFor(bits)
     val sigs = ArtifactCache.of(spark, dir, "mm_frame_sigs")(
       Similarity.capBuckets(
-        Similarity.signatures(spark, f, "fid", tables, bits,
+        Similarity.signatures(f, "fid", tables, bits,
           dim = FrameFeatDim),
         FrameLshBucketCap))
     // the verified pair list is itself a session-cached artifact (the

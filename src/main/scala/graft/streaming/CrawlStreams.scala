@@ -32,8 +32,8 @@ object CrawlStreams {
     val spark = urls.sparkSession
     urls
       .select(col("value").as("url"),
-        UrlCanon.canonCol(spark, col("value")).as("canon_url"),
-        UrlCanon.hostCol(spark, col("value")).as("canon_host"))
+        UrlCanon.canonCol(col("value")).as("canon_url"),
+        UrlCanon.hostCol(col("value")).as("canon_host"))
       .join(knownCanon.select(col("canon_url"), lit(true).as("known0")),
         Seq("canon_url"), "left")
       .select(col("url"), col("canon_url"), col("canon_host"),
@@ -89,8 +89,8 @@ object CrawlStreams {
     val spark = urls.sparkSession
     urls
       .select(col("value").as("url"),
-        UrlCanon.canonCol(spark, col("value")).as("canon_url"),
-        UrlCanon.hostCol(spark, col("value")).as("canon_host"))
+        UrlCanon.canonCol(col("value")).as("canon_url"),
+        UrlCanon.hostCol(col("value")).as("canon_host"))
       .withColumn("path",
         when(col("canon_url").isNotNull,
           regexp_replace(col("canon_url"), "^[a-z]+://[^/]+", "")))
@@ -135,7 +135,7 @@ object CrawlStreams {
       }
       .toDF("host_id", "seq", "loc", "lastmod_s", "priority", "body_corrupt")
       .select(col("host_id"), col("seq"), col("loc"),
-        UrlCanon.canonCol(spark, col("loc")).as("canon_url"),
+        UrlCanon.canonCol(col("loc")).as("canon_url"),
         col("lastmod_s"), col("priority"), col("body_corrupt"))
       .join(knownCanon.select(col("canon_url"), lit(true).as("known0")),
         Seq("canon_url"), "left")

@@ -1,25 +1,52 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import graft.functions.GraftFunctions
 
-class ExtensionsSpec extends AnyFunSuite {
+/** Builds sessions of its own; the shared one is never used here. */
+class ExtensionsSpec extends SparkSpec {
 
-  test("GraftExtensions makes the native functions available to plain SQL") {
-    // getOrCreate reuses any live session and would skip the extension
-    // hook — detach the shared test session first, reattach after
+  private val names = GraftFunctions.all.map(_._1)
+
+  /** Runs `body` on a session of its own. getOrCreate reuses any live
+    * session and would skip the extension hook — detach the shared test
+    * session first, reattach after. */
+  private def withFreshSession[A](
+      configure: SparkSession.Builder => SparkSession.Builder)(
+      body: SparkSession => A): A = {
     val prevDefault = SparkSession.getDefaultSession
     val prevActive  = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val spark = SparkSession.builder()
+    val spark = configure(SparkSession.builder()
       .master("local[2]")
       .appName("graft-ext-test")
       .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions())
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
-    try {
+    try body(spark)
+    finally {
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+      if (prevDefault.isEmpty) spark.stop()
+    }
+  }
+
+  /** Runs `body` on a session without graft's functions. A live
+    * SparkContext whose conf names GraftExtensions injects them into
+    * every session built on it, so they are dropped from this session's
+    * own registry (no other session shares it). */
+  private def withPlainSession[A](body: SparkSession => A): A =
+    withFreshSession(identity) { spark =>
+      val reg = spark.sessionState.functionRegistry
+      names.foreach(n => reg.dropFunction(FunctionIdentifier(n)))
+      names.foreach(n => assert(!spark.catalog.functionExists(n), n))
+      body(spark)
+    }
+
+  test("GraftExtensions makes the native functions available to plain SQL") {
+    withFreshSession(_.withExtensions(new GraftExtensions())) { spark =>
       val row = spark.sql(
         """SELECT graft_rolling_hash('hello world')       AS rh,
           |       graft_simhash64('a b c')                AS sh,
@@ -59,10 +86,31 @@ class ExtensionsSpec extends AnyFunSuite {
       // packed form: top 16 bits = variant code-point length, low 48 = hash₄₈
       assert(hl.map(_ >>> 48).sorted == Seq(2L, 2L, 2L, 3L))
       assert(hl.map(_ & 0xFFFFFFFFFFFFL).toSet == h.map(_ & 0xFFFFFFFFFFFFL).toSet)
-    } finally {
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-      if (prevDefault.isEmpty) spark.stop()
+    }
+  }
+
+  test("every GraftFunctions.all name resolves in a GraftExtensions session") {
+    withFreshSession(_.withExtensions(new GraftExtensions())) { spark =>
+      names.foreach(n => assert(spark.catalog.functionExists(n), n))
+    }
+  }
+
+  test("install registers every GraftFunctions.all name on a plain session") {
+    assert(names.distinct == names)
+    withPlainSession { spark =>
+      GraftFunctions.install(spark)
+      GraftFunctions.install(spark)  // idempotent
+      names.foreach(n => assert(spark.catalog.functionExists(n), n))
+      assert(spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")
+        .head().getDouble(0) == 11.0)
+    }
+  }
+
+  test("a SparkEntry query runs on a plain session (graft_dot, graft_top_k_by_score)") {
+    withPlainSession { spark =>
+      val rows = SparkEntry.queries("ann_topk_exact")(spark, sfDir)
+        .collect()
+      assert(rows.nonEmpty)
     }
   }
 }
